@@ -124,6 +124,14 @@ def pipeline_struct_udf(
     happens inside (same rule constants as the JVM CASE chain, so the
     emitted ppl is NULL exactly where drop_reason says the row died
     earlier).
+
+    Each distinct text of an Arrow batch is evaluated ONCE and its output
+    tuple reused for every repeat (transcripts repeat system prompts,
+    tool boilerplate and canned replies heavily). The memo is keyed on
+    the raw text and lives for one batch, so memory stays bounded by
+    ``maxRecordsPerBatch``. Contract: this is valid only while every
+    output field is a function of the text alone — a future per-row
+    input (e.g. ``role``) must join the memo key.
     """
     from pyspark.sql.types import (
         DoubleType,
@@ -161,21 +169,16 @@ def pipeline_struct_udf(
     def _run(s: pd.Series) -> pd.DataFrame:
         cc = _worker_converter(key)
         texts = s.tolist()  # plain-list iteration beats Series.__iter__
-        # batch the matcher: one megastring pass for the whole Arrow batch
-        # (convert_many) instead of a per-row call — same bytes, ~15% less
-        # matcher overhead on short turns
+        distinct = list(dict.fromkeys(t for t in texts if t is not None))
+        # batch the matcher: one megastring pass over the batch's distinct
+        # texts (convert_many) instead of a per-row call — same bytes, ~15%
+        # less matcher overhead on short turns
         pending = [
-            (cc.normalize_compat(t) if normalize_compat else t)
-            for t in texts
-            if t is not None
+            (cc.normalize_compat(t) if normalize_compat else t) for t in distinct
         ]
-        conv_iter = iter(cc.convert_many(pending, config, punct, preserve_ids))
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append((None,) * len(cols))
-                continue
-            x = next(conv_iter)
+        converted = cc.convert_many(pending, config, punct, preserve_ids)
+        memo = {None: (None,) * len(cols)}
+        for t, x in zip(distinct, converted):
             if detofu_level is not None:
                 x = cc.detofu(x, detofu_level)
             lang = detect_language(x)
@@ -192,11 +195,11 @@ def pipeline_struct_udf(
             # are reconstituted JVM-side (most turns convert to themselves,
             # and scrubbed == converted unless PII matched).
             scrub = scrub_text(x)
-            rows.append(
-                (x if x != t else None, lang, p, m["char_len"], m["word_cnt"],
-                 m["uniq_ratio"], m["symbol_ratio"], scrub if scrub != x else None)
+            memo[t] = (
+                x if x != t else None, lang, p, m["char_len"], m["word_cnt"],
+                m["uniq_ratio"], m["symbol_ratio"], scrub if scrub != x else None,
             )
-        return pd.DataFrame(rows, columns=cols)
+        return pd.DataFrame([memo[t] for t in texts], columns=cols)
 
     return _run
 

@@ -263,6 +263,8 @@ def apportion_budget(
         raise ValueError("total weight must be > 0")
     if budget * mx > (1 << 62):
         raise ValueError("budget * max(weight) would overflow int64; rescale weights")
+    if W * n_buckets > (1 << 62):
+        raise ValueError("total weight * n_buckets would overflow int64; rescale weights")
     placed = w.select(
         host_col,
         F.col("w"),

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from openccnet_spark.operators.hostrank import (
@@ -125,3 +126,23 @@ def test_apportion_guards(spark):
         assert False, "expected ValueError on zero total weight"
     except ValueError:
         pass
+
+
+def test_apportion_bucket_overflow_guard(spark):
+    """``rem * n_buckets`` must fit int64: W * n_buckets > 2^62 is
+    refused, while a total exactly at the bound still apportions
+    exactly."""
+    from openccnet_spark.operators.hostrank import (
+        apportion_budget,
+        apportion_budget_py,
+    )
+
+    huge = [("a", 1 << 52), ("b", 1 << 52)]  # W * 4096 = 2^65
+    df = spark.createDataFrame(huge, "host string, rank long")
+    with pytest.raises(ValueError, match="n_buckets"):
+        apportion_budget(df, 1)
+
+    edge = [("a", 1 << 49), ("b", (1 << 49) - 7), ("c", 7)]  # W * 4096 = 2^62
+    df = spark.createDataFrame(edge, "host string, rank long")
+    got = {r["host"]: r["quota"] for r in apportion_budget(df, 3).collect()}
+    assert got == apportion_budget_py(edge, 3)

@@ -7,12 +7,20 @@ ordering.
 
 from __future__ import annotations
 
+import random
+
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from openccnet_spark import Converter
-from openccnet_spark.functions import convert_udf, st_udf, zho_check_udf
+from openccnet_spark.functions import (
+    convert_udf,
+    pipeline_struct_udf,
+    st_udf,
+    zho_check_udf,
+)
 from openccnet_spark.operators.pipeline import quality_filter, reference_label
 from openccnet_spark.sources.transcripts import (
     POOL,
@@ -77,6 +85,22 @@ def test_st_and_zho_check_udfs(spark):
     assert [r.zho for r in rows] == [2, 2, 1, 0]
 
 
+def _matches_reference(row, ref) -> bool:
+    ppl_equal = (
+        row.ppl is None and ref["ppl"] is None
+        or row.ppl is not None and ref["ppl"] is not None
+        and abs(row.ppl - ref["ppl"]) <= 1e-12
+    )
+    return (
+        row.text_converted == ref["text_converted"]
+        and row.text_scrubbed == ref["text_scrubbed"]
+        and row.lang == ref["lang"]
+        and row.drop_reason == ref["drop_reason"]
+        and row.keep == ref["keep"]
+        and ppl_equal
+    )
+
+
 def test_pipeline_matches_reference_labels(spark, transcripts):
     """Byte-exact per-turn equality vs the pure-Python reference path."""
     cc = Converter()
@@ -87,22 +111,71 @@ def test_pipeline_matches_reference_labels(spark, transcripts):
     mismatches = 0
     for row, (cid, t, _role, text, _tool, _ts, _pidx) in zip(rows, ref_rows):
         assert (row.conv_id, row.turn_idx) == (cid, t)
-        ref = reference_label(text, "t2s", converter=cc)
-        ppl_equal = (
-            row.ppl is None and ref["ppl"] is None
-            or row.ppl is not None and ref["ppl"] is not None
-            and abs(row.ppl - ref["ppl"]) <= 1e-12
-        )
-        if (
-            row.text_converted != ref["text_converted"]
-            or row.text_scrubbed != ref["text_scrubbed"]
-            or row.lang != ref["lang"]
-            or row.drop_reason != ref["drop_reason"]
-            or row.keep != ref["keep"]
-            or not ppl_equal
-        ):
+        if not _matches_reference(row, reference_label(text, "t2s", converter=cc)):
             mismatches += 1
     assert mismatches == 0
+
+
+# Batch texts for the fused-UDF differential: pool turns (identity and
+# converted), NULLs, a NUL-containing text (convert_many's per-text
+# fallback), scrubbable PII and an IDS expression.
+_DIFF_TEXTS = [b * r for b, r in POOL] + [
+    None,
+    "軟體\x00開發 後臺",
+    "联系我 user@example.com 或 +86 138 0013 8000，證件 110101199003078888",
+    "漢字結構：⿰氵漢（漢）",
+]
+
+
+def _frame_rows(df: pd.DataFrame) -> list:
+    """Row tuples with every missing value as None, so frames built from
+    one row (object/int columns) and from many (float columns with NaN)
+    compare by value."""
+    return [
+        tuple(None if v is None or v != v else v for v in row)
+        for row in df.itertuples(index=False)
+    ]
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"config": "t2s"},
+        {"config": "s2twp"},
+        {"config": "s2twp", "detofu_level": 0},
+        {"config": "t2s", "preserve_ids": True},
+        {"config": "t2s", "with_ppl": False},
+    ],
+)
+def test_fused_udf_batch_equals_single_rows(kwargs):
+    """A batch mixing duplicates, NULLs and shuffled orders must give the
+    same frame as concatenating one-row calls: the per-batch memo reuses
+    a distinct text's tuple but never changes it."""
+    run = pipeline_struct_udf(**kwargs).func
+    rng = random.Random(5)
+    for _ in range(3):
+        texts = _DIFF_TEXTS * 2 + rng.sample(_DIFF_TEXTS, 10)
+        rng.shuffle(texts)
+        got = run(pd.Series(texts, dtype=object))
+        expected = [
+            row for t in texts for row in _frame_rows(run(pd.Series([t], dtype=object)))
+        ]
+        assert _frame_rows(got) == expected
+
+
+def test_pipeline_duplicated_rows_match_reference(spark):
+    """Whole rows repeated (same key, same text) and the same text under
+    different keys: every output row must equal its reference label."""
+    cc = Converter()
+    base = [("c", i, t) for i, t in enumerate(_DIFF_TEXTS)]
+    rows = base * 3 + [("d", i, t) for i, t in enumerate(_DIFF_TEXTS[:5])]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    out = quality_filter(df, config="t2s", salt_partitions=3).collect()
+    assert len(out) == len(rows)
+    assert all(
+        _matches_reference(row, reference_label(row.text, "t2s", converter=cc))
+        for row in out
+    )
 
 
 def test_pipeline_plan_shape(spark, transcripts):
